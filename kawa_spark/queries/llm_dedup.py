@@ -966,16 +966,22 @@ def _simhash_bitsums_occ(d: DataFrame) -> DataFrame:
 
 
 def _simhash_bitsums_precount(d: DataFrame) -> DataFrame:
-    """The r16 registered bitsum stage (A/B winner, VERDICT r15
-    item 7): pre-count distinct (doc_id, term) pairs (map-side
-    combine compresses the in-doc duplicates before the shuffle),
-    md5 each DISTINCT pair once, then the same 64 flat codegen SUMs
-    weighted by cnt — s_b = Σ_pairs bit_b·cnt and n_occ = Σ cnt are
-    the exact integers of the occurrence form (Σ_occ bit_b grouped
-    by term), and the DuckDB oracle's own distinct-term shape. Costs
-    one extra exchange on (doc_id, term); the md5-per-occurrence
-    saving beats it 1.25× at the 100× probe (10.60 → 8.49 s,
-    min-of-2, integer-identical by exceptAll at that build)."""
+    """The registered bitsum stage: count distinct (doc_id, term)
+    pairs, md5 each DISTINCT pair once, then the same 64 flat codegen
+    SUMs weighted by cnt — s_b = Σ_pairs bit_b·cnt and n_occ = Σ cnt
+    are the exact integers of the occurrence form (Σ_occ bit_b
+    grouped by term), and the DuckDB oracle's own distinct-term
+    shape. Whether it costs an exchange more than the occurrence form
+    depends on ``spread``: when it repartitions the documents by
+    doc_id (a scan with too few partitions, as on the one-file
+    testdata), that exchange satisfies both the (doc_id, term) and the
+    doc_id grouping, and the plan has as many exchanges as the
+    occurrence form's; when the scan is already wide enough and
+    ``spread`` is a no-op, the pair count shuffles on (doc_id, term)
+    and the per-doc sums shuffle again on doc_id, one exchange more.
+    Hashing once per distinct pair instead of per occurrence is 1.25×
+    at the 100× probe (10.60 → 8.49 s, min-of-2, integer-identical
+    by exceptAll at that build)."""
     pairs = _simhash_occ_terms(d).groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -1092,7 +1098,8 @@ def _simhash_pairs_from_bitsums(
 ) -> DataFrame:
     """Simhash assembly + banding + cap + self-join + hamming verify
     over a per-doc (s0..s63, n_occ) bit-sum table — shared by the
-    registered occurrence form and the dictionary A/B variant."""
+    registered precount stage and the two witness stages (occurrence
+    and dictionary)."""
     bit_weight = [F.lit(1 << b).cast("long") for b in range(63)] + [
         F.lit(-(1 << 63)).cast("long")  # sign bit: avoid long overflow
     ]

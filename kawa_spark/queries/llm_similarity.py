@@ -541,6 +541,18 @@ def _multiprobe_oracle() -> str:
     return _multiprobe_sql(1)
 
 
+def _topk_desc(ids: "np.ndarray", scores: "np.ndarray", k: int) -> "np.ndarray":
+    """Positions of the first ``k`` rows under the final window's order,
+    score desc then id asc, as Spark orders doubles: NaN above every
+    number (so first), then +inf. np.lexsort sorts by its LAST key
+    first: the NaN flag, then the negated score with NaN zeroed (NaN
+    rows tie there and fall through to the id), then the id. A batch-
+    local top-k must use the same order, or it prunes a row the merge
+    window would keep."""
+    nan = np.isnan(scores)
+    return np.lexsort((ids, np.where(nan, 0.0, -scores), ~nan))[:k]
+
+
 def _lsh_sig_bits(dots: "np.ndarray") -> "np.ndarray":
     """Sign-LSH bucket ids from an (n, n_planes) fold-dot panel: bit
     k set iff dot_k > 0.0, with a NaN dot counting as greater — Spark
@@ -649,12 +661,7 @@ def _multiprobe_frame(
                         _seq_fold_dots(em[mask], qm[qi : qi + 1])[:, 0]
                         / denom
                     )
-                # local top-k under the window's total order: score
-                # desc with NaN FIRST (Spark sorts NaN above every
-                # number), n_id asc — np.lexsort would put -NaN last,
-                # so NaN keys map to -inf explicitly
-                key = np.where(np.isnan(sscore), -np.inf, -sscore)
-                order = np.lexsort((sids, key))[:TOP_K]
+                order = _topk_desc(sids, sscore, TOP_K)
                 out_q.extend([qid] * len(order))
                 out_n.extend(sids[order])
                 out_s.extend(sscore[order])
@@ -2478,10 +2485,7 @@ def similarity_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sids, sscore = ids[mask], score[mask]
                 if len(sids) == 0:
                     continue
-                # (score desc, n_id asc), batch-local k — NaN-free by
-                # the zero-norm guard above, so the lexsort order is
-                # total and matches the JVM window exactly
-                order = np.lexsort((sids, -sscore))[:TOP_K]
+                order = _topk_desc(sids, sscore, TOP_K)
                 out_q.extend([qid] * len(order))
                 out_n.extend(sids[order])
                 out_s.extend(sscore[order])

@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 from kawa_spark.io import stream_table, table
 from kawa_spark.queries.events import RATE_LIMIT, RATE_WINDOW_US
 from kawa_spark.registry import register
+from kawa_spark.session import conf_overrides
 from kawa_spark.streaming.stateful import running_total, session_totals
 
 
@@ -38,11 +39,10 @@ def _drain(
     this scale. A production deployment with billions of keys passes
     None (session default) or a sized value."""
     name = f"q_{uuid.uuid4().hex[:10]}"
-    prev_parts = None
+    confs = {}
     if state_partitions is not None:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
+    with conf_overrides(spark, confs):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -50,9 +50,6 @@ def _drain(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     # awaitTermination(timeout) returns False on expiry WITHOUT
     # raising — a silent partial drain would feed a wrong (smaller)
     # result to the correctness gate, so fail loudly instead.
@@ -329,29 +326,22 @@ def stream_exec_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     from kawa_spark.streaming.rollup import read_rollup, start_incremental_rollup
 
     base = tempfile.mkdtemp(prefix="kawa_rollup_")
-    # State here is hours × event types (~thousands of rows), so TWO
-    # store knobs pay off (r8 conf sweep, docs/STATUS.md):
-    # * ONE state partition (r6: 8→4 cut the drain 3.9→2.5 s; r7:
-    #   4→1 a further 2.9→2.5 — per-batch store lifecycle scales with
-    #   instance count, not rows);
-    # * the in-memory HDFSBackedStateStoreProvider instead of RocksDB
-    #   (2.12 → 1.90 s min-of-3 on top of changelog checkpointing —
-    #   session.py's default): RocksDB's native-instance open/commit
-    #   is pure overhead for KB-scale state. This is NOT a small-SF
-    #   cheat: the rollup's state is ∝ windows × types at ANY input
-    #   volume, so the in-memory provider remains correct at 100 TB —
-    #   the provider choice keys on STATE size, never input size.
-    #   Each call uses a fresh checkpoint, so flipping the provider
-    #   per-query is safe (it's locked into a checkpoint at first
-    #   batch; the streaming query captures a cloned conf at start).
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    saved_prov = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "HDFSBackedStateStoreProvider",
-    )
-    try:
+    # The rollup's state is windows × event types (KB-scale) at ANY
+    # input volume, so the drain runs one state partition on the
+    # in-memory HDFSBacked provider: per-batch store cost scales with
+    # instance count and RocksDB's native open/commit, not with rows.
+    # The provider keys on state size, never input size, so this holds
+    # at 100 TB. Each call uses a fresh checkpoint, and the query
+    # clones the conf at start(), so the flip is scoped to this drain.
+    with conf_overrides(
+        spark,
+        {
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state."
+                "HDFSBackedStateStoreProvider"
+            )
+        },
+    ):
         q = start_incremental_rollup(
             spark,
             stream_table(spark, sf_dir, "events"),
@@ -360,16 +350,9 @@ def stream_exec_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFram
             available_now=True,
             state_partitions=1,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "incremental rollup drain did not finish within 300s"
-            )
-    finally:
-        if saved_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, saved_prov)
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError("incremental rollup drain did not finish within 300s")
     return read_rollup(spark, f"{base}/table")
 
 

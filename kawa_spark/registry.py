@@ -199,7 +199,7 @@ DEFERRED: dict[str, str] = {
     "stream_exec_dga_score": "batch twin logs_dga_score same tier; drain runtime reps in-window",
     "stream_exec_first_seen": "batch twin events_first_seen same tier; drain runtime reps in-window",
     "stream_exec_funnel": "batch twin events_funnel r15-green (shared FUNNEL_SQL)",
-    "stream_exec_incremental_rollup": "runtime floor documented (swept r6-r8); drain runtime reps in-window",
+    "stream_exec_incremental_rollup": "one-batch drain (persisted flush input, no trailing no-data batch) into window-month partitions; drain shape pinned by tests/test_rollup.py; drain runtime reps in-window",
     "stream_exec_password_spray": "batch twin events_password_spray same tier; drain runtime reps in-window",
     "stream_exec_template_drift": "batch twin logs_template_drift in-window (shared TEMPLATE_SQL)",
     # ts ops

@@ -19,6 +19,8 @@ The defaults here are the ones that matter at 100 TB:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -113,3 +115,22 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def conf_overrides(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set session confs for the ``with`` block, then put each back as
+    it was (unset again when it was not explicitly set). A streaming
+    query clones the session conf at ``start()``, so wrapping only the
+    ``start()`` call scopes a conf to that one query."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

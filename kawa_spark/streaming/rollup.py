@@ -7,10 +7,11 @@ streaming aggregation + per-partition overwrite in foreachBatch.
 Mechanics:
 * the streaming aggregation keeps per-window state; update mode emits
   only windows CHANGED by each microbatch;
-* the flush overwrites exactly those windows' partition directories
-  (partitionBy window_start, dynamic overwrite) — an idempotent write,
-  so a replayed batch (crash before commit) converges to the same
-  table: exactly-once table contents from at-least-once batches;
+* the flush merges those windows into the table's window-MONTH
+  partitions and overwrites only the touched ones (dynamic partition
+  overwrite) — an idempotent write, so a replayed batch (crash before
+  commit) converges to the same table: exactly-once table contents
+  from at-least-once batches;
 * a watermark bounds the state: windows older than the horizon stop
   updating and their partitions go cold.
 
@@ -27,6 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kawa_spark.functions.exact import dec
+from kawa_spark.session import conf_overrides
+
+PARTITION_COL = "month"
 
 
 def hourly_rollup(events: DataFrame) -> DataFrame:
@@ -47,6 +51,30 @@ def hourly_rollup(events: DataFrame) -> DataFrame:
     )
 
 
+def _table_exists(path: str) -> bool:
+    """Whether ``path`` already holds a rollup table to merge into.
+
+    An explicit probe, NOT a blanket try/except around the read:
+    swallowing a transient read failure would degrade the merge to the
+    changed rows only, and the partition overwrite would then silently
+    drop every untouched group in the affected months. Any other data
+    at ``path`` (the earlier per-date ``dt=`` layout, unpartitioned
+    files) raises: month partitions merged beside it would count its
+    rows twice. Entries starting with ``_`` or ``.`` are commit
+    metadata, which Spark's reader skips too."""
+    if not os.path.isdir(path):
+        return False
+    entries = [e for e in os.listdir(path) if not e.startswith(("_", "."))]
+    foreign = sorted(e for e in entries if not e.startswith(f"{PARTITION_COL}="))
+    if foreign:
+        raise ValueError(
+            f"{path} is not a {PARTITION_COL}-partitioned rollup table "
+            f"(found {foreign[0]}); rebuild it from the event stream "
+            "into a new path with a new checkpoint"
+        )
+    return bool(entries)
+
+
 def start_incremental_rollup(
     spark: SparkSession,
     events: DataFrame,
@@ -65,83 +93,84 @@ def start_incremental_rollup(
     rows, not billions — so a handful of state stores is right at any
     corpus size; each extra partition is a RocksDB instance spun up
     per batch for no data. Callers with genuinely huge window×key
-    spaces pass a bigger number. None = session default."""
-    # dynamic partition overwrite: only the partitions present in the
-    # written frame are replaced
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    spaces pass a bigger number. None = session default.
+
+    ``available_now`` drains what the source holds and stops after the
+    last DATA batch: the trailing no-data batch Spark would otherwise
+    run only evicts state (update mode emits nothing for it). Skipping
+    it is safe across restarts: Spark drops a batch's late rows by the
+    watermark the previous batch evicted state with (the commit log
+    carries it across a restart), so a window is either still in state
+    when a late row for it arrives (the emitted count includes the
+    row) or already evicted and the row dropped; the table never holds
+    a partial window count. The evictions the skipped batch would have
+    run happen in the next drain's first batch instead."""
+    _table_exists(path)  # fail before starting on a foreign layout
 
     def flush(batch_df: DataFrame, batch_id: int) -> None:
-        # Partition the table by window DATE and merge-per-partition:
+        # Partition the table by window MONTH and merge per partition:
         # update emissions carry only the (window, type) groups this
-        # batch changed, so the affected dates' current rows are read
+        # batch changed, so the affected months' current rows are read
         # back, losers evicted (anti-join on the group key), and the
-        # union rewritten — dynamic overwrite touches only those date
-        # directories. Cost per batch: O(changed dates × rows/date),
-        # with rows/date bounded at 24 windows × |event types|.
-        # (A directory per (hour, type) group — the obvious layout —
-        # creates thousands of tiny partitions at any real time range:
-        # measured 26 s for one availableNow batch at sf0.1, and a
-        # file-metadata storm at scale. Per-date dirs + merge is the
-        # standard continuous-aggregate compaction pattern.)
-        changed = batch_df.withColumn("dt", F.to_date("window_start"))
-        dates = [r[0] for r in changed.select("dt").distinct().collect()]
-        # availableNow appends a no-data microbatch for watermark
-        # bookkeeping; in update mode it emits no group changes —
-        # zero touched dates means the read-back + anti-join +
-        # partition rewrite would be a ~1 s no-op per trigger. The
-        # dates collect above is the emptiness probe (already paid).
-        if not dates:
-            return
-        merged = changed
-        # Merge only when the table demonstrably exists (first batch it
-        # doesn't). An explicit existence probe — NOT a blanket
-        # try/except around the read: swallowing a transient read
-        # failure here would degrade `merged` to the changed rows only
-        # and the partition overwrite would then silently drop every
-        # untouched group in the affected dates. Any read error past
-        # this gate propagates and fails the streaming query loudly.
-        if os.path.isdir(path) and any(
-            e.startswith(("dt=", "part-", "_SUCCESS")) for e in os.listdir(path)
-        ):
-            existing = batch_df.sparkSession.read.parquet(path).where(
-                F.col("dt").isin(dates)
-            )
-            keep = existing.join(
-                changed.select("window_start", "event_type"),
-                ["window_start", "event_type"],
-                "left_anti",
-            )
-            merged = changed.unionByName(keep)
-        merged.write.mode("overwrite").partitionBy("dt").parquet(path)
+        # union rewritten — dynamic overwrite touches only those month
+        # directories. Cost per batch: O(changed months × rows/month),
+        # with rows/month bounded at 744 windows × |event types|.
+        # (Finer directories cost a file commit each: a directory per
+        # (hour, type) group made one sf0.1 batch take 26 s, and a
+        # directory per date wrote 30 of them for one month of data.)
+        # `changed` is read by the months probe and twice by the write
+        # (anti-join and union side); persisting it runs the aggregation
+        # and its state-store update once instead of per read. It is
+        # windows × types rows, so the cache is small.
+        changed = batch_df.withColumn(
+            PARTITION_COL, F.trunc(F.to_date("window_start"), "month")
+        ).persist()
+        try:
+            months = [
+                r[0] for r in changed.select(PARTITION_COL).distinct().collect()
+            ]
+            if not months:
+                return
+            merged = changed
+            if _table_exists(path):
+                existing = batch_df.sparkSession.read.parquet(path).where(
+                    F.col(PARTITION_COL).isin(months)
+                )
+                keep = existing.join(
+                    changed.select("window_start", "event_type"),
+                    ["window_start", "event_type"],
+                    "left_anti",
+                )
+                merged = changed.unionByName(keep)
+            merged.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy(PARTITION_COL).parquet(path)
+        finally:
+            changed.unpersist()
 
-    prev_parts = None
+    writer = (
+        hourly_rollup(events)
+        .writeStream.outputMode("update")
+        .foreachBatch(flush)
+        .option("checkpointLocation", checkpoint)
+    )
+    confs = {}
     if state_partitions is not None:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        writer = (
-            hourly_rollup(events)
-            .writeStream.outputMode("update")
-            .foreachBatch(flush)
-            .option("checkpointLocation", checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif trigger:
-            writer = writer.trigger(processingTime=trigger)
+        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    elif trigger:
+        writer = writer.trigger(processingTime=trigger)
+    # the query clones the session conf at start(), so both confs are
+    # scoped to this query and restored right after
+    with conf_overrides(spark, confs):
         return writer.start()
-    finally:
-        # NOTE: restored immediately — safe because the conf is
-        # captured into the query's checkpoint on its first batch,
-        # which planning reads from the writer's snapshot, not the
-        # live session conf.
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def read_rollup(spark: SparkSession, path: str) -> DataFrame:
-    """Current rollup contents: each (window, type) partition holds
-    exactly its latest emission, so this is a plain read."""
+    """Current rollup contents: each (window, type) group is one row
+    holding its latest emission, so this is a plain read."""
     return spark.read.parquet(path).select(
         "window_start", "event_type", "n_events", "total_value"
     )

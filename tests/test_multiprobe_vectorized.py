@@ -72,3 +72,43 @@ def test_seq_fold_matches_cumsum():
         S._seq_fold_sq_norm(em).tobytes()
         == np.cumsum(em * em, axis=1)[:, -1].tobytes()
     )
+
+
+def test_topk_order_puts_nan_before_overflowed_inf(spark):
+    """Scores from folds that overflow to ±inf or hit inf - inf = NaN
+    must rank as Spark's (score desc, n_id asc) window ranks them: NaN
+    above +inf. Mapping NaN to the +inf key would tie the two and let
+    the id decide."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    big, inf = 1e308, np.inf
+    em = np.array(
+        [
+            [big, big],  # fold overflows to +inf
+            [inf, -inf],  # NaN
+            [0.5, 0.25],
+            [-big, -big],  # -inf
+            [big, big],
+            [-inf, inf],  # NaN
+            [0.25, 0.5],
+        ]
+    )
+    ids = np.array([1, 7, 3, 4, 0, 9, 2], dtype=np.int64)
+    with np.errstate(over="ignore", invalid="ignore"):
+        scores = S._seq_fold_dots(em, np.ones((1, 2)))[:, 0]
+    assert np.isposinf(scores[0]) and np.isnan(scores[1])
+
+    local = ids[S._topk_desc(ids, scores, len(ids))].tolist()
+    w = Window.orderBy(F.col("score").desc(), F.col("n_id"))
+    spark_order = [
+        r["n_id"]
+        for r in spark.createDataFrame(
+            [(int(i), float(x)) for i, x in zip(ids, scores)], "n_id long, score double"
+        )
+        .select("n_id", F.row_number().over(w).alias("rnk"))
+        .orderBy("rnk")
+        .collect()
+    ]
+    assert local == spark_order == [7, 9, 0, 1, 2, 3, 4]
+    assert ids[S._topk_desc(ids, scores, 3)].tolist() == [7, 9, 0]
